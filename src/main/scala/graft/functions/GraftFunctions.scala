@@ -177,10 +177,11 @@ object GraftFunctions {
 
   /** F9 percent extraction (etl_completo.py:731-740): first decimal number in
     * the text via `(\d+(?:\.\d+)?)`, else 0.0. `regexp_extract` yields "" on
-    * no-match → cast null → coalesce 0.0.
+    * no-match → `try_cast` null (under any `spark.sql.ansi.enabled`) →
+    * coalesce 0.0.
     */
   def extractPercent(c: Column): Column =
-    coalesce(regexp_extract(c, "(\\d+(?:\\.\\d+)?)", 1).cast("double"), lit(0.0))
+    coalesce(regexp_extract(c, "(\\d+(?:\\.\\d+)?)", 1).try_cast("double"), lit(0.0))
 
   // ---- F13 tri-state date handling (etl_completo.py:615-635) --------------
 
@@ -204,12 +205,14 @@ object GraftFunctions {
   private def slashShape(c: Column): Column = length(c) === 10 && charCount(c, "/") === 2
 
   /** F13 parse result: `yyyy-MM-dd` / `dd/MM/yyyy` by shape, null otherwise.
-    * Requires `spark.sql.ansi.enabled=false` (null on parse failure).
+    * `try_to_date` is null on a parse failure under any
+    * `spark.sql.ansi.enabled`; with ANSI off it is the same expression as
+    * `to_date`.
     */
   def parseMultiFormatDate(c: Column): Column =
     when(isDateSentinel(c), lit(null).cast("date"))
-      .when(dashShape(c), to_date(c, "yyyy-MM-dd"))
-      .when(slashShape(c), to_date(c, "dd/MM/yyyy"))
+      .when(dashShape(c), try_to_date(c, "yyyy-MM-dd"))
+      .when(slashShape(c), try_to_date(c, "dd/MM/yyyy"))
 
   /** F13 keep-row predicate: sentinels/null KEEP the row (with null date);
     * a well-shaped parseable string keeps it; anything else (bad shape or
@@ -217,8 +220,8 @@ object GraftFunctions {
     */
   def keepRowForDate(c: Column): Column =
     isDateSentinel(c) ||
-      (dashShape(c) && to_date(c, "yyyy-MM-dd").isNotNull) ||
-      (slashShape(c) && to_date(c, "dd/MM/yyyy").isNotNull)
+      (dashShape(c) && try_to_date(c, "yyyy-MM-dd").isNotNull) ||
+      (slashShape(c) && try_to_date(c, "dd/MM/yyyy").isNotNull)
 
   /** P8 sentinel-to-null (promo dates, etl_completo.py:746-750): sentinel →
     * null, otherwise the raw value is kept as-is (reference stores the raw
@@ -226,17 +229,13 @@ object GraftFunctions {
     */
   def sentinelToNullDate(c: Column): Column =
     when(isDateSentinel(c), lit(null).cast("date"))
-      .otherwise(coalesce(to_date(c, "yyyy-MM-dd"), to_date(c, "dd/MM/yyyy")))
+      .otherwise(coalesce(try_to_date(c, "yyyy-MM-dd"), try_to_date(c, "dd/MM/yyyy")))
 
   // ---- F12 numeric guards (etl_completo.py:666-668,886-887) ---------------
 
   /** `float(x) if x and x > 0 else 0.0` */
   def positiveOrZero(c: Column): Column =
     when(c.isNotNull && c > 0, c.cast("double")).otherwise(0.0)
-
-  /** `float(x) if x and x >= 0 else 0.0` (desconto guard, :668) */
-  def nonNegativeOrZero(c: Column): Column =
-    when(c.isNotNull && c >= 0, c.cast("double")).otherwise(0.0)
 
   // ---- cross-engine-stable aggregates --------------------------------------
 

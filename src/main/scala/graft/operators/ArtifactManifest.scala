@@ -47,7 +47,7 @@ object ArtifactManifest {
     * first batch. */
   final case class Manifest(nRows: Long, inputHash: Long,
                             foldBatch: Option[Long],
-                            foldRun: Option[String] = None)
+                            foldRun: Option[String])
 
   /** The order-free content fingerprint: (row count, xxhash64 multiset sum
     * over `cols`). Public so consumers that must compare fingerprints
@@ -58,16 +58,16 @@ object ArtifactManifest {
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
-  private def render(n: Long, h: Long, foldBatch: Option[Long],
-                     foldRun: Option[String] = None): String = {
-    val stamp = foldBatch.map(b => s""","fold_batch":$b""").getOrElse("") +
-      foldRun.map(r => s""","fold_run":"$r"""").getOrElse("")
+  /** `fold` is a streaming fold's (batch id, run tag) stamp. */
+  private def render(n: Long, h: Long, fold: Option[(Long, String)] = None): String = {
+    val stamp = fold.map { case (b, r) => s""","fold_batch":$b,"fold_run":"$r"""" }
+      .getOrElse("")
     s"""{"n_rows":$n,"input_hash":$h$stamp}"""
   }
 
   private val ManifestRe =
     ("""\{"n_rows":(-?\d+),"input_hash":(-?\d+)""" +
-      """(?:,"fold_batch":(-?\d+))?(?:,"fold_run":"([0-9a-f]+)")?\}""").r
+      """(?:,"fold_batch":(-?\d+),"fold_run":"([0-9a-f]+)")?\}""").r
 
   private def parse(s: String, where: String): Manifest = s.trim match {
     case ManifestRe(n, h, fb, fr) =>
@@ -143,11 +143,10 @@ object ArtifactManifest {
     * proved content preservation in memory first and only then land the
     * manifest (Compaction's publish gate, the partitioned rollup). */
   def writeValues(artifactDir: String, nRows: Long, inputHash: Long,
-                  spark: SparkSession, foldBatch: Option[Long] = None,
-                  foldRun: Option[String] = None): Unit = {
+                  spark: SparkSession): Unit = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val (fs, p) = manifestPath(artifactDir, hconf)
-    atomicWrite(fs, p, render(nRows, inputHash, foldBatch, foldRun), hconf)
+    atomicWrite(fs, p, render(nRows, inputHash), hconf)
   }
 
   /** Verify the corpus about to be served equals the corpus the artifact
@@ -164,8 +163,8 @@ object ArtifactManifest {
     val (n, h) = fingerprintOf(serveInput, cols)
     require(stored.nRows == n && stored.inputHash == h,
       s"artifact at $artifactDir was not trained on this corpus: " +
-        s"manifest=${render(stored.nRows, stored.inputHash, None)} " +
-        s"recomputed=${render(n, h, None)}")
+        s"manifest=${render(stored.nRows, stored.inputHash)} " +
+        s"recomputed=${render(n, h)}")
   }
 
   /** O(batch) streaming fold: extend the stored manifest to cover
@@ -180,29 +179,20 @@ object ArtifactManifest {
     * Micro-batches arrive sequentially with increasing ids (the
     * single-runner append contract all the artifact folds share), so one
     * stamp suffices. `foldRun` is
-    * [[graft.streaming.IdempotentFold.runIdentity]] of the checkpoint; ""
-    * (legacy batch-only stamping) matches a stamp with no run.
-    * `aliasRuns` are older-era tags for the SAME resumed stream (ADVICE
-    * r16 upgrade): a stored stamp under an alias proves this batch already
-    * folded — re-adding it would double-count the fingerprint. */
+    * [[graft.streaming.IdempotentFold.runIdentity]] of the checkpoint. */
   def add(artifactDir: String, batch: DataFrame, cols: Seq[Column],
-          foldBatchId: Long, foldRun: String = "",
-          aliasRuns: Seq[String] = Nil): Boolean = {
+          foldBatchId: Long, foldRun: String): Boolean = {
     val spark = batch.sparkSession
     val hconf = spark.sparkContext.hadoopConfiguration
     val (fs, p) = manifestPath(artifactDir, hconf)
     require(fs.exists(p),
       s"artifact at $artifactDir has no input manifest ($FILE)")
     val stored = readManifest(fs, p)
-    val runOpt = Option(foldRun).filter(_.nonEmpty)
-    val stampMatches = stored.foldBatch.contains(foldBatchId) &&
-      (stored.foldRun == runOpt ||
-        aliasRuns.map(a => Option(a).filter(_.nonEmpty)).contains(stored.foldRun))
-    if (stampMatches) false
+    if (stored.foldBatch.contains(foldBatchId) && stored.foldRun.contains(foldRun)) false
     else {
       val (n, h) = fingerprintOf(batch, cols)
       atomicWrite(fs, p,
-        render(stored.nRows + n, stored.inputHash + h, Some(foldBatchId), runOpt),
+        render(stored.nRows + n, stored.inputHash + h, Some((foldBatchId, foldRun))),
         hconf)
       true
     }

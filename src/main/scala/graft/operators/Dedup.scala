@@ -322,11 +322,11 @@ object Dedup {
   }
 
   /** Per-task unspillable-build budget for the SHJ choice. The measured
-    * failure mode (VerifyHintProbe, sf10 AND sf100 replicas): every slot
-    * builds its hash map CONCURRENTLY out of `heap × spark.memory.fraction`
-    * execution memory, so a map bigger than its 1/slots share dies on the
-    * growth acquire regardless of how many shuffle partitions spread the
-    * data. Derivation: (heap − 300 MB reserved) × fraction / slots / 2 —
+    * failure mode (SCALE_PROBE_r12_verifyhint.json, sf10 AND sf100
+    * replicas): every slot builds its hash map CONCURRENTLY out of
+    * `heap × spark.memory.fraction` execution memory, so a map bigger than
+    * its 1/slots share dies on the growth acquire regardless of how many
+    * shuffle partitions spread the data. Derivation: (heap − 300 MB reserved) × fraction / slots / 2 —
     * the final /2 covers the BytesToBytesMap growth-doubling transient and
     * storage contention from the operator's own cached build tables.
     * Local mode reads the actual JVM heap (executors share it); cluster
@@ -348,11 +348,6 @@ object Dedup {
         math.max(64L << 20,
           ((heap - (300L << 20)) * fraction / slots / 2).toLong)
       }
-
-  /** Last auto decision (hint, estPairs, avgShingles) — read by the scale
-    * probe and specs to see WHY a strategy was chosen; never read by query
-    * code. Volatile is enough: one LSH build runs at a time per session. */
-  @volatile private[graft] var lastAutoVerify: Option[(String, Double, Double)] = None
 
   /** Resolve the verification-join hint for a cached band table. `banded`
     * must carry (band, band_hash); when it also carries `__delta`
@@ -378,9 +373,7 @@ object Dedup {
     val estPairs = perBucket.agg(coalesce(pairsCol, lit(0.0))).head().getDouble(0)
     val avgSh = prepared.agg(coalesce(avg(size(col("sh"))), lit(0.0)))
       .head().getDouble(0)
-    val hint = pickVerifyHint(estPairs, avgSh, parts, budget)
-    lastAutoVerify = Some((hint, estPairs, avgSh))
-    hint
+    pickVerifyHint(estPairs, avgSh, parts, budget)
   }
 
   def minhashLshPairs(docs: DataFrame, id: String, text: String,

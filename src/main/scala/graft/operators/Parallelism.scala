@@ -23,31 +23,35 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Parallelism {
 
-  /** Repartition `df` up to the session's default parallelism when its
-    * current physical partitioning is narrower, else return it unchanged.
-    *
-    *  - `keys` non-empty: hash repartition on the keys — deterministic
-    *    row→partition assignment (safe under task retry, guide §2.5; no
-    *    sort-before-repartition cost). Pass a high-cardinality key.
-    *  - `keys` empty: round-robin repartition (pays the deterministic
-    *    local sort Spark inserts before round-robin).
-    *
-    * Streaming frames are returned unchanged (micro-batch sizing is the
-    * refresh loops' own concern — IdempotentFold.sizeBatchShuffle).
-    * Results are row-set-identical under any partitioning; callers that
-    * derive values from physical placement (spark_partition_id,
-    * monotonically_increasing_id) must fan out BEFORE deriving, as the
-    * Surrogate helpers do via their own exchanges.
-    */
-  /** Session kill-switch: the micro-batch fold sessions set this false —
-    * a production micro-batch arrives as many files (fan-out is a no-op
-    * there anyway), while the gate's tiny batches only pay the exchange +
-    * per-call planning for nothing (measured r17: +1-3 s per refresh
-    * query). */
+  /** Turns [[fanOut]] off for a session. This is not an A/B switch: it is
+    * how [[graft.streaming.IdempotentFold.foldSession]] keeps fan-out out
+    * of micro-batch frames. A production micro-batch arrives as many files
+    * (fan-out is a no-op there anyway), while the gate's tiny batches only
+    * pay the exchange + per-call planning for nothing (measured r17: +1-3 s
+    * per refresh query). */
   val EnabledConf = "spark.graft.fanout.enabled"
 
-  /** Session kill-switch for [[withInputSizedShuffle]] (A/B probes). */
-  val LoopSizeConf = "spark.graft.loopsize.enabled"
+  /** Per-session reentrant lock for the save/set/restore of
+    * `spark.sql.shuffle.partitions` below (ADVICE r17 medium): two
+    * OVERLAPPING calls on one session would interleave their save/restore
+    * (A saves 200→sets 4, B saves 4→sets 2, A restores 200, B restores 4 —
+    * the session width is permanently clobbered). Serializing the loops on
+    * one session is the honest semantics — their per-round widths are
+    * session-global state; genuinely concurrent loops belong on session
+    * clones (`newSession`, the `runToCompletion`/`foldSession` pattern).
+    * Reentrant because loops legitimately nest (pipelineManifest's CC runs
+    * inside callers that may size their own loops); the inner call then
+    * sizes within the outer's narrowed cap, exactly as the serial
+    * semantics always did. Keyed weakly so dead sessions don't pin locks. */
+  private val loopLocks =
+    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
+      java.util.concurrent.locks.ReentrantLock]()
+  private def loopLock(s: org.apache.spark.sql.SparkSession) =
+    loopLocks.synchronized {
+      var l = loopLocks.get(s)
+      if (l == null) { l = new java.util.concurrent.locks.ReentrantLock(); loopLocks.put(s, l) }
+      l
+    }
 
   /** Run `body` with the session's `spark.sql.shuffle.partitions` sized to
     * the loop inputs' optimizer-estimated bytes — `ceil(bytes/targetBytes)`
@@ -71,34 +75,11 @@ object Parallelism {
     * cross-engine determinism contract), and the full oracle gate re-proves
     * it.
     */
-  /** Per-session reentrant lock for the save/set/restore of
-    * `spark.sql.shuffle.partitions` below (ADVICE r17 medium): two
-    * OVERLAPPING calls on one session would interleave their save/restore
-    * (A saves 200→sets 4, B saves 4→sets 2, A restores 200, B restores 4 —
-    * the session width is permanently clobbered). Serializing the loops on
-    * one session is the honest semantics — their per-round widths are
-    * session-global state; genuinely concurrent loops belong on session
-    * clones (`newSession`, the `runToCompletion`/`foldSession` pattern).
-    * Reentrant because loops legitimately nest (pipelineManifest's CC runs
-    * inside callers that may size their own loops); the inner call then
-    * sizes within the outer's narrowed cap, exactly as the serial
-    * semantics always did. Keyed weakly so dead sessions don't pin locks. */
-  private val loopLocks =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.locks.ReentrantLock]()
-  private def loopLock(s: org.apache.spark.sql.SparkSession) =
-    loopLocks.synchronized {
-      var l = loopLocks.get(s)
-      if (l == null) { l = new java.util.concurrent.locks.ReentrantLock(); loopLocks.put(s, l) }
-      l
-    }
-
   def withInputSizedShuffle[T](inputs: Seq[DataFrame],
                                targetBytes: Long = 32L << 20,
                                floorN: Int = 1)(body: => T): T = {
     if (inputs.isEmpty) return body
     val session = inputs.head.sparkSession
-    if (session.conf.get(LoopSizeConf, "true") != "true") return body
     val lock = loopLock(session)
     lock.lock()
     try {
@@ -129,6 +110,22 @@ object Parallelism {
     } finally lock.unlock()
   }
 
+  /** Repartition `df` up to the session's default parallelism when its
+    * current physical partitioning is narrower, else return it unchanged.
+    *
+    *  - `keys` non-empty: hash repartition on the keys — deterministic
+    *    row→partition assignment (safe under task retry, guide §2.5; no
+    *    sort-before-repartition cost). Pass a high-cardinality key.
+    *  - `keys` empty: round-robin repartition (pays the deterministic
+    *    local sort Spark inserts before round-robin).
+    *
+    * Streaming frames are returned unchanged (micro-batch sizing is the
+    * refresh loops' own concern — IdempotentFold.sizeBatchShuffle).
+    * Results are row-set-identical under any partitioning; callers that
+    * derive values from physical placement (spark_partition_id,
+    * monotonically_increasing_id) must fan out BEFORE deriving, as the
+    * Surrogate helpers do via their own exchanges.
+    */
   def fanOut(df: DataFrame, keys: Seq[Column] = Nil): DataFrame = {
     if (df.isStreaming) return df
     val session = df.sparkSession

@@ -178,9 +178,10 @@ object Sampling {
     // Cache the distinct-items input BEFORE zipWithIndexOrdered: its
     // repartitionByRange evaluates the upstream lineage three times (range
     // -sampling job + offsets pass + main pass), and each evaluation is a
-    // full distinct-shuffle over p without this cache (r9 profile:
-    // NegSampleProf measured the index build at 2.5 s of the ~8 s eager
-    // build; this removes two of the three distinct evaluations).
+    // full distinct-shuffle over p without this cache (r9 profile: the
+    // index build was 2.5 s of the ~8 s eager build; this removes two of
+    // the three distinct evaluations; current timings in
+    // AB_NEGSAMP_r18.json).
     val distinctItems = p.select(col("item")).distinct().cache()
     val items = Surrogate.zipWithIndexOrdered(
       distinctItems, "idx", Seq(col("item"))).cache()

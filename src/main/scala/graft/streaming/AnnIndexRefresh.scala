@@ -59,10 +59,8 @@ object AnnIndexRefresh {
     val s = IdempotentFold.foldSession(spark, shufflePartitions)
     // bookkeeping keyed by the checkpoint's run identity (query UUID —
     // ADVICE r15/r16: batch ids restart at 0 under a new checkpoint, even
-    // one recreated at the same path); aliases honor a resumed stream's
-    // older-era bookkeeping
-    val keys = IdempotentFold.runKeys(spark, checkpointDir)
-    val run = keys.run
+    // one recreated at the same path)
+    val run = IdempotentFold.runIdentity(spark, checkpointDir)
     val fingerCols = Seq(col("vec_id"), col("embedding"))
     var batches = 0L
     val q = s.readStream.schema(embeddingsSchema)
@@ -75,9 +73,9 @@ object AnnIndexRefresh {
           // explicit override wins; else size this batch's shuffles to its
           // own input bytes (VERDICT r16 #5)
           IdempotentFold.sizeBatchShuffle(b, shufflePartitions): Unit
-          if (!IdempotentFold.isCommittedAny(b.sparkSession, indexDir, keys, batchId)) {
-            IdempotentFold.cleanKeyedAll(b.sparkSession, s"$indexDir/cells.parquet", keys, batchId)
-            IdempotentFold.cleanKeyedAll(b.sparkSession, s"$indexDir/codes.parquet", keys, batchId)
+          if (!IdempotentFold.isCommitted(b.sparkSession, indexDir, run, batchId)) {
+            IdempotentFold.cleanKeyed(b.sparkSession, s"$indexDir/cells.parquet", run, batchId)
+            IdempotentFold.cleanKeyed(b.sparkSession, s"$indexDir/codes.parquet", run, batchId)
             val (cells, codes) = Similarity.ivfPqAssignFrames(b, indexDir, m, dim)
             // the batch's three side-effects are pairwise independent (two
             // distinct index tables + the manifest sidecar) — overlap them
@@ -87,9 +85,9 @@ object AnnIndexRefresh {
               () => IdempotentFold.appendKeyed(cells, s"$indexDir/cells.parquet", run, batchId),
               () => IdempotentFold.appendKeyed(codes, s"$indexDir/codes.parquet", run, batchId),
               // O(batch) manifest fold, exactly-once via the (run, batch)
-              // stamp; alias runs match a stamp an older code era landed
+              // stamp
               () => ArtifactManifest.add(indexDir, b.select(fingerCols: _*),
-                fingerCols, batchId, run, keys.aliases): Unit)
+                fingerCols, batchId, run): Unit)
             IdempotentFold.markCommitted(b.sparkSession, indexDir, run, batchId)
           }
           batches += 1

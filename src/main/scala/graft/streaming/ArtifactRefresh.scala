@@ -61,11 +61,8 @@ object ArtifactRefresh {
     // all bookkeeping is keyed by the checkpoint's run identity (its query
     // UUID): a NEW checkpoint — even one recreated at the same path —
     // restarts batch ids at 0, and without the tag those would silently
-    // collide with a finished run's markers (ADVICE r15/r16); on a RESUMED
-    // checkpoint the alias keys also honor bookkeeping an older code era
-    // wrote for this same stream (ADVICE r16 upgrade path)
-    val keys = IdempotentFold.runKeys(spark, checkpointDir)
-    val run = keys.run
+    // collide with a finished run's markers (ADVICE r15/r16)
+    val run = IdempotentFold.runIdentity(spark, checkpointDir)
     val schema = EventsStream.documentsSchema
     val fingerCols = Seq(col(id), col(text))
     var batches = 0L
@@ -79,13 +76,12 @@ object ArtifactRefresh {
           // explicit override wins; else size this batch's shuffles to its
           // own input bytes (VERDICT r16 #5)
           IdempotentFold.sizeBatchShuffle(b, shufflePartitions): Unit
-          if (!IdempotentFold.isCommittedAny(b.sparkSession, artifactDir, keys, batchId)) {
+          if (!IdempotentFold.isCommitted(b.sparkSession, artifactDir, run, batchId)) {
             // a replayed, partially-committed batch: erase its keyed files
-            // FIRST (current tag AND upgrade aliases), so the recompute
-            // sees exactly the pre-batch artifact
-            IdempotentFold.cleanKeyedAll(b.sparkSession, pairsDir, keys, batchId)
-            IdempotentFold.cleanKeyedAll(b.sparkSession, s"$artifactDir/shingles.parquet", keys, batchId)
-            IdempotentFold.cleanKeyedAll(b.sparkSession, s"$artifactDir/bands.parquet", keys, batchId)
+            // FIRST, so the recompute sees exactly the pre-batch artifact
+            IdempotentFold.cleanKeyed(b.sparkSession, pairsDir, run, batchId)
+            IdempotentFold.cleanKeyed(b.sparkSession, s"$artifactDir/shingles.parquet", run, batchId)
+            IdempotentFold.cleanKeyed(b.sparkSession, s"$artifactDir/bands.parquet", run, batchId)
             // the batch's (shingles, bands) frames are computed ONCE and
             // shared between pair discovery and the artifact fold (r18:
             // the old composition shingled and band-hashed the batch
@@ -107,9 +103,9 @@ object ArtifactRefresh {
               () => IdempotentFold.appendKeyed(sh, s"$artifactDir/shingles.parquet", run, batchId),
               () => IdempotentFold.appendKeyed(bandedC, s"$artifactDir/bands.parquet", run, batchId),
               // O(batch) manifest fold, exactly-once via the (run, batch)
-              // stamp; alias runs match a stamp an older code era landed
+              // stamp
               () => ArtifactManifest.add(artifactDir, b.select(fingerCols: _*),
-                fingerCols, batchId, run, keys.aliases): Unit)
+                fingerCols, batchId, run): Unit)
             pairs.unpersist()
             sh.unpersist()
             bandedC.unpersist()

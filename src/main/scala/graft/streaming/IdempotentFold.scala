@@ -19,8 +19,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * at the same path is a NEW identity, ADVICE r16 medium); markers, staging
   * dirs and keyed part files all embed it, so two runs' bookkeeping can
   * never collide and a replayed batch only ever erases its OWN run's
-  * partial work. [[runKeys]] adds read-side aliases for bookkeeping older
-  * code eras wrote for the same resumed stream.
+  * partial work.
   *
   * Three pieces, composed by the refresh loops:
   *
@@ -124,40 +123,6 @@ object IdempotentFold {
   }
   private val MetaIdRe = """"id"\s*:\s*"([0-9a-fA-F-]+)"""".r
 
-  /** The r16 path-hash tag — kept ONLY as an upgrade alias: bookkeeping
-    * written by r16 code for this same checkpoint used it as the run key. */
-  def legacyPathTag(checkpointDir: String): String = {
-    val normalized = new Path(checkpointDir).toString
-    f"${scala.util.hashing.MurmurHash3.stringHash(normalized) & 0xffffffffL}%08x"
-  }
-
-  /** The current run tag plus the alias tags older code eras keyed THIS
-    * stream's bookkeeping by. `""` is the pre-r16 batch-only era
-    * ([[keyedPrefix]]/markers render it with no `r<tag>_` part). */
-  final case class RunKeys(run: String, aliases: Seq[String]) {
-    def all: Seq[String] = run +: aliases
-  }
-
-  /** Resolve the run identity for a refresh about to start. Aliases cover
-    * bookkeeping written by OLDER code for THIS SAME stream (ADVICE r16
-    * upgrade path): the r16 path-hash tag and the pre-r16 batch-only
-    * keying. They are active ONLY when the checkpoint has prior engine
-    * state (its `offsets/` log is non-empty) — the batches a resumed
-    * checkpoint can re-deliver are exactly the ones an older era may have
-    * half-landed, and under the single-runner contract that older bookkeeping
-    * can only be this stream's own. A FRESH checkpoint gets no aliases: a
-    * dead run that happened to use the same path must never make the new
-    * run's batches look committed (the data-loss class run identity exists
-    * to prevent). */
-  def runKeys(spark: SparkSession, checkpointDir: String): RunKeys = {
-    val run = runIdentity(spark, checkpointDir)
-    val (fs, ck) = fsFor(spark, checkpointDir)
-    val offsets = new Path(ck, "offsets")
-    val resumed = fs.exists(offsets) && fs.listStatus(offsets).nonEmpty
-    if (resumed) RunKeys(run, Seq(legacyPathTag(checkpointDir), ""))
-    else RunKeys(run, Nil)
-  }
-
   /** Highest batch id recorded in the checkpoint's `commits/` log, or -1
     * when none: batches at or below it are committed by the ENGINE and can
     * never be re-delivered — the safety horizon below which markers are
@@ -173,38 +138,36 @@ object IdempotentFold {
     }
   }
 
-  /** The keyed-file name prefix for (`run`, `batchId`). `run == ""` renders
-    * the pre-r16 batch-only form (`b<id>_`) — read-side alias only; writes
-    * always carry the current tag. */
-  def keyedPrefix(run: String, batchId: Long) =
-    if (run.isEmpty) s"b${batchId}_" else s"r${run}_b${batchId}_"
+  /** Every name below embeds a [[runIdentity]] tag (16 lowercase hex
+    * digits); a name with any other tag is not fold bookkeeping. */
+  private def checkRun(run: String): String = {
+    require(run.matches("[0-9a-f]{16}"), s"not a runIdentity tag: '$run'")
+    run
+  }
+
+  /** The keyed-file name prefix for (`run`, `batchId`). */
+  def keyedPrefix(run: String, batchId: Long): String =
+    s"r${checkRun(run)}_b${batchId}_"
 
   /** Parse a keyed file name back to its (run, batchId), None for plain
     * (unkeyed) parts — how [[FoldCompaction]] splits a dataset's files
-    * into replay-dead and replay-live. Pre-r16 batch-only names parse as
-    * run `""`. */
+    * into replay-dead and replay-live. */
   def parseKeyed(name: String): Option[(String, Long)] = name match {
-    case KeyedRe(run, id)  => Some((run, id.toLong))
-    case LegacyKeyedRe(id) => Some(("", id.toLong))
+    case KeyedRe(run, id) => Some((run, id.toLong))
+    case _                => None
+  }
+  private val KeyedRe = """^r([0-9a-f]{16})_b(\d+)_.*""".r
+
+  /** A marker's file name for (`run`, `batchId`). */
+  def markerName(run: String, batchId: Long): String =
+    s"r${checkRun(run)}_b$batchId"
+
+  /** Parse a marker file name to (run, batchId). */
+  def parseMarker(name: String): Option[(String, Long)] = name match {
+    case MarkerRe(run, id) => Some((run, id.toLong))
     case _                 => None
   }
-  private val KeyedRe = """^r([0-9a-f]{8,64})_b(\d+)_.*""".r
-  private val LegacyKeyedRe = """^b(\d+)_.*""".r
-
-  /** A marker's file name for (`run`, `batchId`) — `""` is the pre-r16
-    * batch-only era. */
-  def markerName(run: String, batchId: Long): String =
-    if (run.isEmpty) s"b$batchId" else s"r${run}_b$batchId"
-
-  /** Parse a marker file name to (run, batchId); pre-r16 batch-only
-    * markers parse as run `""`. */
-  def parseMarker(name: String): Option[(String, Long)] = name match {
-    case MarkerRe(run, id)  => Some((run, id.toLong))
-    case LegacyMarkerRe(id) => Some(("", id.toLong))
-    case _                  => None
-  }
-  private val MarkerRe = """^r([0-9a-f]{8,64})_b(\d+)$""".r
-  private val LegacyMarkerRe = """^b(\d+)$""".r
+  private val MarkerRe = """^r([0-9a-f]{16})_b(\d+)$""".r
 
   private def markerPath(p: Path, run: String, batchId: Long) =
     new Path(p, s"_commits/${markerName(run, batchId)}")
@@ -217,27 +180,19 @@ object IdempotentFold {
     fs.exists(markerPath(p, run, batchId))
   }
 
-  /** [[isCommitted]] under the current tag OR any upgrade alias — the
-    * resumed-checkpoint read path (a batch an older code era fully landed
-    * must not be recomputed on replay; ADVICE r16 upgrade). */
-  def isCommittedAny(spark: SparkSession, dir: String, keys: RunKeys,
-                     batchId: Long): Boolean =
-    keys.all.exists(isCommitted(spark, dir, _, batchId))
-
   /** Land the batch's commit marker — call ONLY after every side-effect
     * (keyed appends AND the manifest fold) has completed. */
   def markCommitted(spark: SparkSession, dir: String, run: String,
                     batchId: Long): Unit = {
-    require(run.nonEmpty, "commit markers are always written run-tagged")
     val (fs, p) = fsFor(spark, dir)
     fs.create(markerPath(p, run, batchId), true).close()
   }
 
-  /** Delete markers of the given runs at or below `horizon` (see
+  /** Delete run `run`'s markers at or below `horizon` (see
     * [[committedHorizon]] — those batches can never be re-delivered, so
     * their markers are dead weight that would otherwise accumulate
     * one-per-batch forever). Returns how many were pruned. */
-  def pruneMarkers(spark: SparkSession, dir: String, runs: Seq[String],
+  def pruneMarkers(spark: SparkSession, dir: String, run: String,
                    horizon: Long): Int = {
     val (fs, p) = fsFor(spark, dir)
     val commits = new Path(p, "_commits")
@@ -245,58 +200,36 @@ object IdempotentFold {
     else {
       val dead = fs.listStatus(commits).toSeq.filter { st =>
         parseMarker(st.getPath.getName)
-          .exists { case (r, id) => runs.contains(r) && id <= horizon }
+          .exists { case (r, id) => r == run && id <= horizon }
       }
       dead.foreach(st => fs.delete(st.getPath, false))
       dead.size
     }
   }
 
-  /** Single-run convenience overload. */
-  def pruneMarkers(spark: SparkSession, dir: String, run: String,
-                   horizon: Long): Int =
-    pruneMarkers(spark, dir, Seq(run), horizon)
-
   /** Remove `batchId`'s keyed part files (and any stale staging dir) from
     * the dataset at `destDir` — the replay's first move, erasing a crashed
     * attempt's partial append before recomputing. Only files of THIS run
-    * are touched. No-op when none exist. */
+    * are touched; one directory listing finds both. No-op when none
+    * exist. */
   def cleanKeyed(spark: SparkSession, destDir: String, run: String,
                  batchId: Long): Unit = {
     val (fs, p) = fsFor(spark, destDir)
     if (fs.exists(p)) {
+      val prefix = keyedPrefix(run, batchId)
+      val staging = stagingName(run, batchId)
       fs.listStatus(p).foreach { st =>
         val n = st.getPath.getName
-        if (st.isFile && n.startsWith(keyedPrefix(run, batchId)))
+        if (st.isFile && n.startsWith(prefix))
           fs.delete(st.getPath, false)
-      }
-      val staging = new Path(p, s"_staging_r${run}_b$batchId")
-      if (fs.exists(staging)) fs.delete(staging, true): Unit
-    }
-  }
-
-  /** [[cleanKeyed]] under the current tag AND every upgrade alias: a torn
-    * attempt of this batch may have been written by an older code era
-    * (`b<id>_` files, r16 path-tag files) — the replay must erase those
-    * too or the recompute double-appends (ADVICE r16 upgrade). One
-    * directory listing serves every tag (r18, VERDICT r17 #1: the per-tag
-    * re-list paid |tags| round-trips per dataset per batch for the same
-    * status array). */
-  def cleanKeyedAll(spark: SparkSession, destDir: String, keys: RunKeys,
-                    batchId: Long): Unit = {
-    val (fs, p) = fsFor(spark, destDir)
-    if (fs.exists(p)) {
-      val prefixes = keys.all.map(keyedPrefix(_, batchId))
-      val stagings = keys.all.map(r => s"_staging_r${r}_b$batchId").toSet
-      fs.listStatus(p).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isFile && prefixes.exists(n.startsWith))
-          fs.delete(st.getPath, false)
-        else if (st.isDirectory && stagings(n))
+        else if (st.isDirectory && n == staging)
           fs.delete(st.getPath, true): Unit
       }
     }
   }
+
+  private def stagingName(run: String, batchId: Long) =
+    s"_staging_r${checkRun(run)}_b$batchId"
 
   /** Run independent per-batch side-effects CONCURRENTLY on a bounded pool
     * (guide §2.6 — Spark happily runs several jobs at once; the refresh
@@ -308,17 +241,11 @@ object IdempotentFold {
     * replay contract is untouched — a crash can now leave any SUBSET of
     * the batch's side-effects landed instead of a prefix, and the re-entry
     * path already erases every keyed file of the batch before recomputing,
-    * order-free ([[cleanKeyedAll]]); the commit marker still lands only
+    * order-free ([[cleanKeyed]]); the commit marker still lands only
     * after ALL tasks complete. Exceptions propagate (first cause) so a
     * failed append still fails the stream loudly. */
-  /** Session kill-switch for [[inParallel]] (interleaved A/B probes). */
-  val OverlapConf = "spark.graft.overlap.enabled"
-
   def inParallel(spark: SparkSession)(tasks: (() => Unit)*): Unit = {
-    if (tasks.lengthCompare(2) < 0 ||
-        spark.conf.get(OverlapConf, "true") != "true") {
-      tasks.foreach(_()); return
-    }
+    if (tasks.lengthCompare(2) < 0) { tasks.foreach(_()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(tasks.size, 4))
     try {
@@ -380,7 +307,7 @@ object IdempotentFold {
                   batchId: Long): Unit = {
     val spark = df.sparkSession
     val (fs, dest) = fsFor(spark, destDir)
-    val staging = new Path(dest, s"_staging_r${run}_b$batchId")
+    val staging = new Path(dest, stagingName(run, batchId))
     df.write.mode("overwrite").parquet(staging.toString)
     fs.listStatus(staging).foreach { st =>
       val n = st.getPath.getName

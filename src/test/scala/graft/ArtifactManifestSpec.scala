@@ -16,6 +16,8 @@ class ArtifactManifestSpec extends SparkSpec {
     rows.toDF("doc_id", "text")
 
   private val cols = Seq(col("doc_id"), col("text"))
+  /** A runIdentity-shaped fold tag for the streaming-fold cases. */
+  private val run = "0123456789abcdef"
   private val train = Seq(1L -> "alpha", 2L -> "beta", 3L -> "gamma")
 
   private def freshArtifact(): String = {
@@ -55,8 +57,8 @@ class ArtifactManifestSpec extends SparkSpec {
       val bucket = pmod(xxhash64(col("doc_id"), lit(seed)), lit(3))
       val dir = java.nio.file.Files.createTempDirectory(s"manifest_add_$seed").toString
       ArtifactManifest.write(dir, docs.filter(bucket === 0), cols)
-      assert(ArtifactManifest.add(dir, docs.filter(bucket === 1), cols, 0L))
-      assert(ArtifactManifest.add(dir, docs.filter(bucket === 2), cols, 1L))
+      assert(ArtifactManifest.add(dir, docs.filter(bucket === 1), cols, 0L, run))
+      assert(ArtifactManifest.add(dir, docs.filter(bucket === 2), cols, 1L, run))
       ArtifactManifest.check(dir, docs, cols) // folded == rescanned
     }
   }
@@ -64,14 +66,15 @@ class ArtifactManifestSpec extends SparkSpec {
   test("add refuses to fold the same micro-batch twice (at-least-once replay guard)") {
     val dir = freshArtifact()
     val batch = corpus(Seq(10L -> "delta"))
-    assert(ArtifactManifest.add(dir, batch, cols, foldBatchId = 7L))
+    assert(ArtifactManifest.add(dir, batch, cols, foldBatchId = 7L, run))
     val after = ArtifactManifest.read(dir, spark).get
     assert(after.foldBatch === Some(7L))
+    assert(after.foldRun === Some(run))
     // re-delivery of batch 7: a no-op, manifest unchanged
-    assert(!ArtifactManifest.add(dir, batch, cols, foldBatchId = 7L))
+    assert(!ArtifactManifest.add(dir, batch, cols, foldBatchId = 7L, run))
     assert(ArtifactManifest.read(dir, spark).get === after)
     // the next batch folds normally
-    assert(ArtifactManifest.add(dir, corpus(Seq(11L -> "next")), cols, 8L))
+    assert(ArtifactManifest.add(dir, corpus(Seq(11L -> "next")), cols, 8L, run))
     ArtifactManifest.check(dir,
       corpus(train ++ Seq(10L -> "delta", 11L -> "next")), cols)
   }

@@ -173,7 +173,7 @@ class FoldCompactionSpec extends SparkSpec {
 
   test("in-place swap self-heals: roll back from a gate-less crash, roll forward from a gate-passed one") {
     import spark.implicits._
-    val run = "deadbeef"
+    val run = "deadbeefdeadbeef"
     val parent = tmp("foldc_swap")
     val ds = s"$parent/data.parquet"
     (1L to 100L).map(i => (i, s"row$i")).toDF("id", "v")
@@ -210,7 +210,7 @@ class FoldCompactionSpec extends SparkSpec {
     fsOf(parent).mkdirs(new Path(art))
     def batchDf(lo: Long) = (lo until lo + 10L).map(i => (i, s"v$i")).toDF("id", "v")
 
-    val runA = "aaaaaaaa"; val runB = "bbbbbbbb"
+    val runA = "aaaaaaaaaaaaaaaa"; val runB = "bbbbbbbbbbbbbbbb"
     // run A: batches 0,1 (committed — markers land), horizon will say 1
     for (b <- 0L to 1L) {
       IdempotentFold.appendKeyed(batchDf(b * 10), ds, runA, b)
@@ -321,93 +321,6 @@ class FoldCompactionSpec extends SparkSpec {
       targetFileBytes = bigLen * 2, markerDir = Some(art))
     assert(st2.skipped, "a lone plain runt must not be rewritten into itself")
     assert(spark.read.parquet(ds).collect().map(_.toString).sorted.toSeq === want)
-  }
-
-  test("upgrade path: a resumed checkpoint honors pre-r16 batch-only bookkeeping — committed batches skip, torn batches clean and recompute, the manifest never double-folds (ADVICE r16)") {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val base = docs.filter(col("doc_id") % 4 >= 2)
-    val delta = docs.filter(col("doc_id") % 4 < 2)
-    val deltaDir = splitDelta(delta)
-
-    // control: uninterrupted modern run
-    val artC = buildArtifact(base)
-    val pairsC = tmp("foldc_up_pc")
-    ArtifactRefresh.refreshFromStream(spark, deltaDir, "doc_id", "text",
-      artC, pairsC, tmp("foldc_up_ckc"))
-    val wantPairs = pairsMultiset(pairsC)
-    val wantBands = spark.read.parquet(s"$artC/bands.parquet").count()
-
-    // rewrite a run's bookkeeping to the pre-r16 era: b<id>_ file names,
-    // _commits/b<id> markers, a run-less manifest fold stamp
-    def demote(art: String, pairs: String, ck: String): Long = {
-      val run = IdempotentFold.runIdentity(spark, ck)
-      val fs = fsOf(art)
-      for (d <- Seq(s"$art/shingles.parquet", s"$art/bands.parquet", pairs);
-           st <- fs.listStatus(new Path(d)) if st.isFile) {
-        val n = st.getPath.getName
-        if (n.startsWith(s"r${run}_b"))
-          require(fs.rename(st.getPath, new Path(d, n.stripPrefix(s"r${run}_"))))
-      }
-      var last = -1L
-      for (st <- fs.listStatus(new Path(art, "_commits"))) {
-        IdempotentFold.parseMarker(st.getPath.getName).foreach { case (r, id) =>
-          if (r == run) {
-            last = math.max(last, id)
-            fs.create(new Path(art, s"_commits/b$id"), true).close()
-            fs.delete(st.getPath, false)
-          }
-        }
-      }
-      val m = ArtifactManifest.read(art, spark).get
-      ArtifactManifest.writeValues(art, m.nRows, m.inputHash, spark,
-        m.foldBatch, foldRun = None)
-      last
-    }
-    def tearEngineCommit(ck: String, id: Long): Unit = {
-      new java.io.File(s"$ck/commits").listFiles()
-        .filter(f => f.getName.forall(_.isDigit) && f.getName.toLong >= id)
-        .foreach { f =>
-          assert(f.delete())
-          val crc = new java.io.File(f.getParent, s".${f.getName}.crc")
-          if (crc.exists()) assert(crc.delete())
-        }
-    }
-
-    // case 1: the legacy batch fully landed (marker present) but the engine
-    // commit was torn — the replay must SKIP on the legacy marker
-    val art1 = buildArtifact(base); val pairs1 = tmp("foldc_up_p1")
-    val ck1 = tmp("foldc_up_ck1")
-    ArtifactRefresh.refreshFromStream(spark, deltaDir, "doc_id", "text",
-      art1, pairs1, ck1)
-    val last1 = demote(art1, pairs1, ck1)
-    assert(last1 >= 2)
-    tearEngineCommit(ck1, last1)
-    ArtifactRefresh.refreshFromStream(spark, deltaDir, "doc_id", "text",
-      art1, pairs1, ck1)
-    assert(pairsMultiset(pairs1) === wantPairs)
-    assert(spark.read.parquet(s"$art1/bands.parquet").count() === wantBands)
-    ArtifactManifest.check(art1, docs.select(dCols: _*), dCols)
-
-    // case 2: the legacy batch is TORN (marker gone, a band file gone) but
-    // its manifest fold landed — the replay must erase the legacy files,
-    // recompute under the new tag, and NOT fold the manifest twice
-    val art2 = buildArtifact(base); val pairs2 = tmp("foldc_up_p2")
-    val ck2 = tmp("foldc_up_ck2")
-    ArtifactRefresh.refreshFromStream(spark, deltaDir, "doc_id", "text",
-      art2, pairs2, ck2)
-    val last2 = demote(art2, pairs2, ck2)
-    val fs2 = fsOf(art2)
-    fs2.delete(new Path(art2, s"_commits/b$last2"), false)
-    val keyed = fs2.listStatus(new Path(s"$art2/bands.parquet"))
-      .filter(_.getPath.getName.startsWith(s"b${last2}_"))
-    assert(keyed.nonEmpty, "expected legacy-named band files")
-    fs2.delete(keyed.head.getPath, false) // tear the legacy append
-    tearEngineCommit(ck2, last2)
-    ArtifactRefresh.refreshFromStream(spark, deltaDir, "doc_id", "text",
-      art2, pairs2, ck2)
-    assert(pairsMultiset(pairs2) === wantPairs)
-    assert(spark.read.parquet(s"$art2/bands.parquet").count() === wantBands)
-    ArtifactManifest.check(art2, docs.select(dCols: _*), dCols)
   }
 
   test("foldSession: a caller-set shuffle-partition override survives; default stays 8") {

@@ -9,8 +9,8 @@ import graft.streaming.{ArtifactRefresh, IdempotentFold}
 /** Pins the run-identity contract (ADVICE r16): UUID-keyed 64-bit run tags,
   * engine adoption of the pre-minted metadata id, wipe-and-recreate at the
   * SAME checkpoint path = a NEW identity (the fixed-nightly-ck-dir ops
-  * pattern that silently lost data under path-hash tags), era parsing, and
-  * the per-batch shuffle self-sizing (VERDICT r16 #5).
+  * pattern that silently lost data under path-hash tags), bookkeeping name
+  * parsing, and the per-batch shuffle self-sizing (VERDICT r16 #5).
   */
 class IdempotentFoldSpec extends SparkSpec {
   import spark.implicits._
@@ -92,21 +92,23 @@ class IdempotentFoldSpec extends SparkSpec {
     ArtifactManifest.check(art, docs.select(dCols: _*), dCols)
   }
 
-  test("era parsing: current 16-hex, r16 8-hex, and pre-r16 batch-only forms") {
-    assert(IdempotentFold.parseKeyed("rdeadbeefdeadbeef_b12_part-0.parquet")
-      === Some(("deadbeefdeadbeef", 12L)))
-    assert(IdempotentFold.parseKeyed("rdeadbeef_b3_part-0.parquet")
-      === Some(("deadbeef", 3L)))
-    assert(IdempotentFold.parseKeyed("b7_part-0.parquet") === Some(("", 7L)))
-    assert(IdempotentFold.parseKeyed("part-00000-c000.snappy.parquet") === None)
-    assert(IdempotentFold.parseMarker("rdeadbeefdeadbeef_b12")
-      === Some(("deadbeefdeadbeef", 12L)))
-    assert(IdempotentFold.parseMarker("rdeadbeef_b3") === Some(("deadbeef", 3L)))
-    assert(IdempotentFold.parseMarker("b7") === Some(("", 7L)))
-    assert(IdempotentFold.parseMarker("anything-else") === None)
-    assert(IdempotentFold.keyedPrefix("", 5L) === "b5_")
-    assert(IdempotentFold.markerName("", 5L) === "b5")
-    assert(IdempotentFold.keyedPrefix("aa", 5L) === "raa_b5_")
+  test("name parsing: only the 16-hex runIdentity form is fold bookkeeping") {
+    val run = "deadbeefdeadbeef"
+    assert(IdempotentFold.keyedPrefix(run, 12L) === s"r${run}_b12_")
+    assert(IdempotentFold.markerName(run, 12L) === s"r${run}_b12")
+    assert(IdempotentFold.parseKeyed(s"r${run}_b12_part-0.parquet") === Some((run, 12L)))
+    assert(IdempotentFold.parseMarker(s"r${run}_b12") === Some((run, 12L)))
+    // plain parts, batch-only names and 8-hex tags are not bookkeeping
+    for (n <- Seq("part-00000-c000.snappy.parquet", "b7_part-0.parquet",
+                  "rdeadbeef_b3_part-0.parquet"))
+      assert(IdempotentFold.parseKeyed(n) === None, n)
+    for (n <- Seq("b7", "rdeadbeef_b3", "anything-else"))
+      assert(IdempotentFold.parseMarker(n) === None, n)
+    // and no such name can be written
+    for (bad <- Seq("", "deadbeef", "DEADBEEFDEADBEEF")) {
+      intercept[IllegalArgumentException](IdempotentFold.keyedPrefix(bad, 5L))
+      intercept[IllegalArgumentException](IdempotentFold.markerName(bad, 5L))
+    }
   }
 
   test("per-batch shuffle self-sizing: derived tracks input bytes, explicit override wins (VERDICT r16 #5)") {
@@ -144,19 +146,19 @@ class IdempotentFoldSpec extends SparkSpec {
     assert(s.conf.get("spark.sql.shuffle.partitions") === bigger.toString)
   }
 
-  test("pruneMarkers prunes the named runs (incl. pre-r16 batch-only) at or below the horizon") {
+  test("pruneMarkers prunes the named run at or below the horizon") {
     val art = tmp("idf_prune")
     fsOf(art).mkdirs(new Path(art))
     val runA = "aaaaaaaaaaaaaaaa"
+    val runB = "bbbbbbbbbbbbbbbb"
     IdempotentFold.markCommitted(spark, art, runA, 0L)
     IdempotentFold.markCommitted(spark, art, runA, 5L)
-    IdempotentFold.markCommitted(spark, art, "bbbbbbbb", 1L)
-    fsOf(art).create(new Path(art, "_commits/b2"), true).close() // legacy era
-    val n = IdempotentFold.pruneMarkers(spark, art, Seq(runA, ""), 3L)
-    assert(n === 2, "runA b0 and legacy b2 prune; b5 is above the horizon")
+    IdempotentFold.markCommitted(spark, art, runB, 1L)
+    val n = IdempotentFold.pruneMarkers(spark, art, runA, 3L)
+    assert(n === 1, "runA b0 prunes; b5 is above the horizon")
+    assert(!IdempotentFold.isCommitted(spark, art, runA, 0L))
     assert(IdempotentFold.isCommitted(spark, art, runA, 5L))
-    assert(IdempotentFold.isCommitted(spark, art, "bbbbbbbb", 1L),
+    assert(IdempotentFold.isCommitted(spark, art, runB, 1L),
       "an unnamed run's markers survive")
-    assert(!IdempotentFold.isCommitted(spark, art, "", 2L))
   }
 }

@@ -57,22 +57,6 @@ class R18OpsSpec extends SparkSpec {
     assert(e.getMessage === "boom")
   }
 
-  test("inParallel kill-switch runs tasks serially on the caller thread") {
-    val prevConf = spark.conf.getOption(IdempotentFold.OverlapConf)
-    spark.conf.set(IdempotentFold.OverlapConf, "false")
-    try {
-      val t = Thread.currentThread()
-      var sameThread = true
-      IdempotentFold.inParallel(spark)(
-        () => { sameThread &&= (Thread.currentThread() eq t) },
-        () => { sameThread &&= (Thread.currentThread() eq t) })
-      assert(sameThread)
-    } finally prevConf match {
-      case Some(v) => spark.conf.set(IdempotentFold.OverlapConf, v)
-      case None => spark.conf.unset(IdempotentFold.OverlapConf)
-    }
-  }
-
   test("derivedStatePartitions sizes from input bytes with floor and cap") {
     val dir = Files.createTempDirectory("dsp")
     Files.write(dir.resolve("a.bin"), new Array[Byte](1000))

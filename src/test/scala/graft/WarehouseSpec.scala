@@ -236,4 +236,18 @@ class WarehouseSpec extends SparkSpec {
     assert(metrics("rows") === n)
     assert(metrics("valor_total").asInstanceOf[Double] > 0.0)
   }
+
+  test("an ANSI-on session (Spark 4's default) builds the same warehouse as an ANSI-off one") {
+    // digest = SHA-256 of the table's sorted rows, computed on the driver
+    // (a Spark-side sum of row hashes would itself overflow under ANSI)
+    def digests(s: org.apache.spark.sql.SparkSession): Map[String, String] =
+      Warehouse.build(s, "/root/testdata/sf0.001").tables.map { case (name, df) =>
+        val rows = df.collect().map(_.toString).sorted.mkString("\n")
+        name -> java.security.MessageDigest.getInstance("SHA-256")
+          .digest(rows.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+      }.toMap
+    val ansi = spark.newSession()
+    ansi.conf.set("spark.sql.ansi.enabled", "true")
+    assert(digests(ansi) === digests(spark))
+  }
 }

@@ -5,7 +5,7 @@
 # number of executor JVMs dividing them varies. Emits one JSON line per
 # config (graft.Bench's self-adjudicating tail included).
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 export SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/tmp/graft_sf1}
 export SPARK_GRAFT_ONLY=q_ann_ivf_fixedk,q_audio_energy,q_bm25,q_pagerank,q_dedup_minhash,q_fato_vendas,q_exact_substr,q_split_leakage_safe,q_tokenize,q_winnow
 export SPARK_GRAFT_SHUFFLE_PARTITIONS=32
